@@ -359,38 +359,52 @@ def main() -> None:
         metric_errors["hub_scan"] = str(e).split("\n")[0][:200]
 
     # --- streaming metrics vs BASELINE.md's 0.2 ms/event worked example ---
-    # (a) end-to-end micro-batch replay at the reference's default trigger
-    #     size (partitionCount * 1000): events/sec incl. planning+execution
+    # (a) end-to-end drain of readStream.format("eventhubs") — the path
+    #     users run — at the reference's default trigger size
+    #     (partitionCount * 1000) into a foreachBatch count: events/sec
+    #     incl. planning and execution. A processingTime trigger +
+    #     processAllAvailable, because availableNow admits only ONE
+    #     batch under a trigger limit.
     # (b) planner-only cost per trigger on the materialized hub log
     #     (footer-stat bounds + rate limit + range planning, no data read)
     import shutil
     import tempfile
 
-    from spark_eventhubs_spark.conf import EventHubsConf
-    from spark_eventhubs_spark.connstr import file_hub_connection_string
+    from spark_eventhubs_spark.queries import _threaded_drain
     from spark_eventhubs_spark.sources.datasource import (
         EventHubsStreamReader,
         materialize_hub,
+        register_eventhubs,
     )
-    from spark_eventhubs_spark.sources.hub import SimulatedEventHubs
-    from spark_eventhubs_spark.streaming.source import EventHubsSource, MicroBatchRunner
 
     work = tempfile.mkdtemp(prefix="bench_hub_")
     stream_eps = ms_per_event = n_batches = planner_ms = n_plans = -1
     try:
         hub_dir = materialize_hub(spark, sf_dir, f"{work}/hublog")
-        hub = SimulatedEventHubs(spark, name="events", hub_log_dir=hub_dir)
-        conf = EventHubsConf(file_hub_connection_string(sf_dir, "events"))
-        conf.set("eventhubs.maxEventsPerTrigger", str(4 * 1000))
-        src = EventHubsSource(spark, conf, hub)
-        runner = MicroBatchRunner(
-            src, f"{work}/ckpt", lambda df, bid: df.count()
-        )
+        register_eventhubs(spark)
+        counts: list[int] = []
         t0 = time.time()
-        n_batches = runner.run()
+        q = (
+            spark.readStream.format("eventhubs")
+            .option("path", hub_dir)
+            .option("eventhubs.consumerGroup", "bench_stream_headline")
+            .option("maxEventsPerTrigger", str(4 * 1000))
+            .load()
+            .writeStream.foreachBatch(lambda df, bid: counts.append(df.count()))
+            .option("checkpointLocation", f"{work}/ckpt")
+            .trigger(processingTime="5 milliseconds")
+            .start()
+        )
+        try:
+            _threaded_drain(q.processAllAvailable, 600, "stream_headline")
+        finally:
+            q.stop()
         stream_s = time.time() - t0
         if n_events <= 0:  # the scan section failed before counting
             n_events = spark.read.parquet(events_path).count()
+        if sum(counts) != n_events:
+            raise RuntimeError(f"drained {sum(counts)} of {n_events} events")
+        n_batches = len(counts)
         stream_eps = round(n_events / stream_s) if stream_s > 0 else -1
         ms_per_event = round(1000.0 * stream_s / n_events, 4)
         opts = {"path": hub_dir, "eventhubs.maxeventspertrigger": "4000"}

@@ -14,8 +14,9 @@ Layout:
     position    EventPosition                 (ref: eventhubs/EventPosition.scala)
     offsets     OffsetRange / source offsets  (ref: eventhubs/rdd/OffsetRange.scala, sql/eventhubs/JsonUtils.scala)
     plans/      canonical hub view derivation (ref: sql/eventhubs/EventHubsSourceProvider.scala eventHubsSchema)
-    sources/    simulated hub, client (translate), batch relation, writer
-    streaming/  micro-batch source, rate limiting, slow-partition tracker
+    sources/    simulated hub, client (translate), batch relation, writer,
+                format("eventhubs") DataSource (the one micro-batch source)
+    streaming/  rate limiting, slow-partition tracker, stateful operators
     operators/  dedup, similarity, text analysis, multimodal
     functions/  shared deterministic hashing / tokenization helpers
 """

@@ -31,10 +31,12 @@ Scale design (100 TB):
   Each task reads only its partition directory (hive pruning) and only
   the row groups overlapping its seqNo range (stats pruning), via
   Arrow batches end to end.
-- **Rate limiting** reuses the proportional backlog-weighted split
-  (streaming/ratelimit.py, ref EventHubsSource.scala:263-319) inside
-  ``latestOffset``; the streaming engine's own offset log provides
-  exactly-once planning.
+- **Admission control** lives in ``latestOffset``: the
+  ``maxRate(s)PerPartition`` clamp, then the proportional
+  backlog-weighted ``maxEventsPerTrigger`` split (streaming/ratelimit.py,
+  ref EventHubsSource.scala:263-319), weighted by slow-partition
+  factors when ``slowPartitionAdjustment`` is on. The streaming
+  engine's own offset log provides exactly-once planning.
 - The write path stages per-task Arrow files, then ``commit()``
   assigns dense per-partition sequence numbers centrally — the role
   the service's broker plays on arrival; at-least-once delivery with
@@ -50,6 +52,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 from dataclasses import dataclass
 from typing import Dict, Iterator, List, Optional, Sequence, Tuple
@@ -385,12 +388,12 @@ def _plan_range_partitions(
 # executor-side read (pure pyarrow)
 # ---------------------------------------------------------------------------
 
-def _read_range(p: RangeInputPartition) -> Iterator[pa.RecordBatch]:
+def _read_range(p: RangeInputPartition) -> List[pa.RecordBatch]:
     """Read [from, until) of one hub partition as Arrow batches:
     hive pruning picks the one partition directory, footer stats prune
     row groups, and the receive contract — seqNo-sorted, exactly
     until-from rows (ref CachedEventHubsReceiver.scala:227-287) — is
-    enforced before yielding."""
+    enforced before returning."""
     ds = pads.dataset(p.hub_dir, format="parquet", partitioning=_partitioning())
     filt = (
         (pads.field("partition") == str(p.partition_id))
@@ -413,7 +416,7 @@ def _read_range(p: RangeInputPartition) -> Iterator[pa.RecordBatch]:
         else pa.chunked_array([pa.array([str(p.partition_id)] * n, pa.string())])
         for f in out_schema
     ]
-    yield from pa.table(cols, schema=out_schema).to_batches(max_chunksize=65536)
+    return pa.table(cols, schema=out_schema).to_batches(max_chunksize=65536)
 
 
 # ---------------------------------------------------------------------------
@@ -425,8 +428,12 @@ class EventHubsBatchReader(DataSourceReader):
         self.options = options
 
     def partitions(self) -> Sequence[InputPartition]:
+        from spark_eventhubs_spark.auth import acquire_connection_token
+
         hub_dir = _hub_dir_from_options(self.options)
         conf = _conf_from_options(self.options)
+        # AAD callback at connection open (ref ClientConnectionPool.scala:63-80)
+        acquire_connection_token(conf)
         bounds = hub_bounds(hub_dir, conf.partition_count)
         start = _resolve_positions(conf, hub_dir, bounds, use_start=True)
         end = _resolve_positions(conf, hub_dir, bounds, use_start=False)
@@ -448,12 +455,31 @@ class EventHubsBatchReader(DataSourceReader):
 # streaming reader (ref EventHubsSource.scala)
 # ---------------------------------------------------------------------------
 
+def _read_json(path: str):
+    try:
+        with open(path) as fh:
+            return json.load(fh)
+    except (OSError, ValueError):
+        return None
+
+
+def _write_json(path: str, obj) -> None:
+    """Write-then-rename, so readers only ever see a complete file. The
+    tmp name carries the pid: executors write receive records
+    concurrently."""
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = f"{path}.{os.getpid()}.tmp"
+    with open(tmp, "w") as fh:
+        json.dump(obj, fh)
+    os.replace(tmp, path)
+
+
 class EventHubsStreamReader(DataSourceStreamReader):
     """Micro-batch source: latestOffset probes footer-stat bounds and
-    applies the proportional rate limit (ref EventHubsSource.scala
-    getOffset :206-244 + rateLimit :263-319); partitions() diffs two
-    offsets into per-partition ranges (getBatch :329-420). Offsets are
-    the reference's JSON shape {"<hub>": {"<pid>": seqNo}}
+    applies admission control (ref EventHubsSource.scala getOffset
+    :206-244 + rateLimit :263-319); partitions() diffs two offsets into
+    per-partition ranges (getBatch :329-420). Offsets are the
+    reference's JSON shape {"<hub>": {"<pid>": seqNo}}
     (JsonUtils.scala:63-100).
 
     **Cursor file.** Spark serves initialOffset/latestOffset/partitions/
@@ -467,6 +493,20 @@ class EventHubsStreamReader(DataSourceStreamReader):
     twice. Two concurrent queries should use distinct consumer groups,
     exactly as the reference requires for two receivers
     (docs/structured-streaming-eventhubs-integration.md).
+
+    **Admission control.** ``maxRate(s)PerPartition``, when set, clamps
+    each partition to ``min(from + rate_p, latest)`` (the DStream
+    semantics, EventHubsDirectDStream.scala:97-105); ``maxEventsPerTrigger``
+    then splits its budget across partitions by backlog. With
+    ``slowPartitionAdjustment`` on, the split is weighted by
+    ``PartitionsStatusTracker`` factors, rebuilt on every latestOffset
+    from two sidecars of the cursor: ``<group>.batches.json`` (the last
+    ``TRACKING_BATCH_COUNT`` planned batches' ranges, written by
+    partitions()) and ``<group>.receive/<pid>-<from>.json`` (one Arrow
+    read time per range, written by read() on the executor) — the
+    file-backed replacement of the reference's executor->driver
+    PartitionPerformanceReceiver RPC. With the key off none of these
+    files is touched.
 
     **Trigger.AvailableNow + maxEventsPerTrigger.** Spark's Python
     streaming API exposes no SupportsTriggerAvailableNow hook, so an
@@ -486,7 +526,10 @@ class EventHubsStreamReader(DataSourceStreamReader):
         self._conf = _conf_from_options(options)
         self.name = self._conf.name or os.path.basename(self.hub_dir.rstrip("/")) or "events"
         group = self._conf.consumer_group.replace("$", "_")
-        self._cursor_path = os.path.join(self.hub_dir, "_cursors", f"{group}.json")
+        cursors = os.path.join(self.hub_dir, "_cursors")
+        self._cursor_path = os.path.join(cursors, f"{group}.json")
+        self._batches_path = os.path.join(cursors, f"{group}.batches.json")
+        self._receive_dir = os.path.join(cursors, f"{group}.receive")
 
     def _pack(self, seq_nos: Dict[int, int]) -> dict:
         return {self.name: {str(p): int(s) for p, s in sorted(seq_nos.items())}}
@@ -497,56 +540,120 @@ class EventHubsStreamReader(DataSourceStreamReader):
 
     # -- cursor file ops --
     def _cursor_read(self) -> Optional[Dict[int, int]]:
-        try:
-            with open(self._cursor_path) as fh:
-                return {int(k): int(v) for k, v in json.load(fh).items()}
-        except (OSError, ValueError):
-            return None
+        cur = _read_json(self._cursor_path)
+        return None if cur is None else {int(k): int(v) for k, v in cur.items()}
 
     def _cursor_write(self, seq_nos: Dict[int, int], merge: bool = True) -> Dict[int, int]:
-        os.makedirs(os.path.dirname(self._cursor_path), exist_ok=True)
         if merge:
             cur = self._cursor_read() or {}
             for pid, s in seq_nos.items():
                 cur[pid] = max(cur.get(pid, 0), s)
         else:
             cur = dict(seq_nos)
-        tmp = self._cursor_path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({str(p): s for p, s in cur.items()}, fh)
-        os.replace(tmp, self._cursor_path)
+        _write_json(self._cursor_path, {str(p): s for p, s in cur.items()})
         return cur
 
+    # -- slow-partition sidecars (ref PartitionsStatusTracker.scala) --
+    def _track_batch(self, ranges: List[List[int]]) -> None:
+        """Record one planned batch's [pid, from, until] ranges, keep the
+        last TRACKING_BATCH_COUNT, and drop the receive records of
+        evicted batches. A replayed batch (same ranges) is not
+        registered twice."""
+        from spark_eventhubs_spark.streaming.tracker import TRACKING_BATCH_COUNT
+
+        batches = _read_json(self._batches_path) or []
+        if any(b["ranges"] == ranges for b in batches):
+            return
+        next_id = batches[-1]["id"] + 1 if batches else 0
+        batches = (batches + [{"id": next_id, "ranges": ranges}])[-TRACKING_BATCH_COUNT:]
+        _write_json(self._batches_path, batches)
+        live = {f"{p}-{f}.json" for b in batches for p, f, _ in b["ranges"]}
+        if os.path.isdir(self._receive_dir):
+            for name in set(os.listdir(self._receive_dir)) - live:
+                os.remove(os.path.join(self._receive_dir, name))
+
+    def record_receive(self, partition: RangeInputPartition, elapsed_ms: float) -> None:
+        """One range's receive record: its event count and read time."""
+        _write_json(
+            os.path.join(self._receive_dir,
+                         f"{partition.partition_id}-{partition.from_seq_no}.json"),
+            {"events": partition.until_seq_no - partition.from_seq_no, "ms": elapsed_ms},
+        )
+
+    def _performance_factors(self, partition_count: int) -> Dict[int, float]:
+        """Rebuild the tracker from the sidecars and return its factors
+        (ref EventHubsSource.scala:226-236)."""
+        from spark_eventhubs_spark.offsets import NameAndPartition, OffsetRange
+        from spark_eventhubs_spark.streaming.tracker import PartitionsStatusTracker
+
+        tracker = PartitionsStatusTracker(
+            partition_count, self._conf.max_acceptable_batch_receive_time_ms
+        )
+        for b in _read_json(self._batches_path) or []:
+            tracker.add_batch(b["id"], [
+                OffsetRange(NameAndPartition(self.name, p), f, u) for p, f, u in b["ranges"]
+            ])
+        names = os.listdir(self._receive_dir) if os.path.isdir(self._receive_dir) else []
+        for name in sorted(n for n in names if n.endswith(".json")):
+            rec = _read_json(os.path.join(self._receive_dir, name))
+            if rec is not None:
+                pid, frm = (int(x) for x in name[:-len(".json")].split("-"))
+                tracker.update_partition_performance(pid, frm, rec["events"], rec["ms"])
+        return tracker.partitions_performance_percentage() or tracker.default_percentages()
+
     def initialOffset(self) -> dict:
+        from spark_eventhubs_spark.auth import acquire_connection_token
+
+        # AAD callback at connection open (ref ClientConnectionPool.scala:63-80)
+        acquire_connection_token(self._conf)
         bounds = hub_bounds(self.hub_dir, self._conf.partition_count)
         start = _resolve_positions(self._conf, self.hub_dir, bounds, use_start=True)
-        # a fresh query = a fresh consumer: reset (not merge) the cursor
+        # a fresh query = a fresh consumer: reset (not merge) the cursor,
+        # and drop the previous query's batches, whose ranges could
+        # collide with this query's in the tracker
         self._cursor_write(start, merge=False)
+        if self._conf.slow_partition_adjustment:
+            shutil.rmtree(self._receive_dir, ignore_errors=True)
+            if os.path.exists(self._batches_path):
+                os.remove(self._batches_path)
         return self._pack(start)
 
     def latestOffset(self) -> dict:
         from spark_eventhubs_spark.streaming.ratelimit import rate_limit
 
         bounds = hub_bounds(self.hub_dir, self._conf.partition_count)
-        latest = {pid: b[1] for pid, b in bounds.items()}
+        target = {pid: b[1] for pid, b in bounds.items()}
         # bare key first, prefixed alias second (EventHubsConf.scala:711-712)
         raw = self._conf.get("maxEventsPerTrigger") or self._conf.get(
             "eventhubs.maxEventsPerTrigger"
         )
-        cursor = self._cursor_read()
-        if cursor is None and raw is not None:
-            # the engine calls latestOffset before initialOffset on a
-            # fresh stream: seed the cursor from the configured start so
-            # the very first trigger is already throttled
-            cursor = self._cursor_write(
-                _resolve_positions(self._conf, self.hub_dir, bounds, use_start=True)
-            )
-        if raw is None:
-            target = latest
-        else:
+        if raw is not None or self._conf.max_rate_configured:
+            cursor = self._cursor_read()
+            if cursor is None:
+                # the engine calls latestOffset before initialOffset on a
+                # fresh stream: seed the cursor from the configured start
+                # so the very first trigger is already throttled
+                cursor = self._cursor_write(
+                    _resolve_positions(self._conf, self.hub_dir, bounds, use_start=True)
+                )
             earliest = {pid: b[0] for pid, b in bounds.items()}
-            start = {pid: max(cursor.get(pid, 0), earliest[pid]) for pid in latest}
-            target = rate_limit(int(raw), start, latest, earliest, None)
+            start = {pid: max(cursor.get(pid, 0), earliest[pid]) for pid in target}
+            if self._conf.max_rate_configured:
+                # per-partition clamp min(from + maxRate_p, latest), held
+                # at `from` if latest ever regresses below it
+                # (EventHubsDirectDStream.scala:97-106); per-partition
+                # overrides beat the global scalar
+                # (EventHubsConf.scala:344-346). Applied BEFORE the
+                # proportional split, so both controls compose.
+                rate = self._conf.max_rate_per_partition_for
+                target = {
+                    pid: max(start[pid], min(l, start[pid] + rate(pid)))
+                    for pid, l in target.items()
+                }
+            if raw is not None:
+                factors = (self._performance_factors(len(target))
+                           if self._conf.slow_partition_adjustment else None)
+                target = rate_limit(int(raw), start, target, earliest, factors)
         # monotonic merge guarantees this answer is >= every previous one
         merged = self._cursor_write(target)
         return self._pack({pid: merged.get(pid, s) for pid, s in target.items()})
@@ -562,6 +669,14 @@ class EventHubsStreamReader(DataSourceStreamReader):
             pos = self._conf.starting_position_for(pid)
             s[pid] = pos.seq_no if pos.seq_no is not None else bounds[pid][0]
         parts = _plan_range_partitions(self.hub_dir, s, e, bounds)
+        if self._conf.slow_partition_adjustment and parts:
+            # every partition of the batch, empty ones included: they
+            # count towards the tracker's update quorum
+            planned = {p.partition_id: p for p in parts}
+            self._track_batch([
+                [pid, planned[pid].from_seq_no if pid in planned else e[pid], e[pid]]
+                for pid in sorted(e)
+            ])
         return parts or [RangeInputPartition(self.hub_dir, 0, 0, 0)]
 
     def read(self, partition: RangeInputPartition) -> Iterator[pa.RecordBatch]:
@@ -570,7 +685,11 @@ class EventHubsStreamReader(DataSourceStreamReader):
                 {f.name: pa.array([], f.type) for f in _arrow_out_schema()}
             ).to_batches()
             return
-        yield from _read_range(partition)
+        t0 = time.perf_counter()
+        batches = _read_range(partition)
+        if self._conf.slow_partition_adjustment:
+            self.record_receive(partition, (time.perf_counter() - t0) * 1000.0)
+        yield from batches
 
     def commit(self, end: dict) -> None:
         self._cursor_write(self._unpack(end))
@@ -877,8 +996,6 @@ def compact_hub_log(spark, hub_dir: str, partition_count: int = 4) -> dict:
     runs partition-aligned with no shuffle wider than the repartition.
     Returns {partition_id: n_files_before}.
     """
-    import shutil
-
     from pyspark.sql import functions as F
 
     from spark_eventhubs_spark.plans.hubview import configure_session
@@ -934,8 +1051,6 @@ def truncate_hub_log(
     footer stats cannot represent without rows). Returns the rows
     dropped per partition.
     """
-    import shutil
-
     from pyspark.sql import functions as F
 
     from spark_eventhubs_spark.plans.hubview import configure_session

@@ -1,5 +1,4 @@
 from spark_eventhubs_spark.streaming.ratelimit import rate_limit
 from spark_eventhubs_spark.streaming.tracker import PartitionsStatusTracker
-from spark_eventhubs_spark.streaming.source import EventHubsSource, MicroBatchRunner
 
-__all__ = ["rate_limit", "PartitionsStatusTracker", "EventHubsSource", "MicroBatchRunner"]
+__all__ = ["rate_limit", "PartitionsStatusTracker"]

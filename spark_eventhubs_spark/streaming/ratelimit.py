@@ -14,9 +14,10 @@ with the exact rounding/starvation semantics the reference's tests pin
 
 Pure dict math on the driver — there is deliberately no Spark job here;
 this is admission control that happens before a plan exists (SURVEY
-§4.1). Keys are partition ids (int); the reference's NameAndPartition
-wrapper is only needed with multiple hubs, which ``EventHubsSource``
-handles by keeping one planner per hub.
+§4.1), called from ``EventHubsStreamReader.latestOffset``
+(sources/datasource.py). Keys are partition ids (int); the reference's
+NameAndPartition wrapper is only needed with multiple hubs, which the
+native source handles by keeping one reader per hub.
 """
 
 from __future__ import annotations

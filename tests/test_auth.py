@@ -112,11 +112,16 @@ def test_bad_class_path_and_wrong_type_error():
         )
 
 
-def test_callback_runs_at_connection_open(spark):
-    """read_eventhubs must execute the callback before planning — a
-    failing acquisition aborts the read, and a succeeding one is
-    actually called (ref ClientConnectionPool.scala:63-80)."""
+def test_callback_runs_at_connection_open(spark, tmp_path):
+    """read_eventhubs and the native format("eventhubs") readers must
+    execute the callback before planning — a failing acquisition aborts
+    the read, and a succeeding one is actually called
+    (ref ClientConnectionPool.scala:63-80)."""
     from spark_eventhubs_spark.sources.batch import read_eventhubs
+    from spark_eventhubs_spark.sources.datasource import (
+        EventHubsBatchReader,
+        EventHubsStreamReader,
+    )
 
     CALLS.clear()
     conf = _conf().set_aad_auth_callback(f"{__name__}.AadMock")
@@ -127,3 +132,14 @@ def test_callback_runs_at_connection_open(spark):
     class_path = f"{__name__}.NotACallback"
     with pytest.raises(TypeError):
         read_eventhubs(spark, _conf().set_aad_auth_callback(class_path))
+
+    # the native readers, driven in-process the way Spark's planner
+    # starts them (an EventHubsConf is a valid options map)
+    hub = str(tmp_path / "hub")
+    for start_planning in (lambda c: EventHubsBatchReader(c).partitions(),
+                           lambda c: EventHubsStreamReader(c).initialOffset()):
+        CALLS.clear()
+        start_planning(_conf().set("path", hub).set_aad_auth_callback(f"{__name__}.AadMock"))
+        assert len(CALLS) == 1 and CALLS[0][0] == EVENTHUBS_AUDIENCE
+        with pytest.raises(TypeError):
+            start_planning(_conf().set("path", hub).set_aad_auth_callback(class_path))
